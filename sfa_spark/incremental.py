@@ -132,23 +132,20 @@ def refresh_tier(
         agg_df = reaggregate(slice_df, key_cols, tier)
     else:
         agg_df = rollup_tier(slice_df, key_cols, ts_col, value_col, tier)
-    tier_df = agg_df.withColumn("dt", F.to_date("bucket_ts"))
-    rows_by_day = {
-        str(r["dt"]): r["n"]
-        for r in tier_df.groupBy("dt").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+    # rollup_rows_by_day is summed from the written files' footers, so
+    # the rollup runs once, in the write
     snap = tio.write_snapshot(
-        tier_df,
+        agg_df.withColumn("dt", F.to_date("bucket_ts")),
         "dt",
         job=job,
         metrics={
             "tier": tier,
-            "rollup_rows_by_day": rows_by_day,
             "input_fp_by_day": {
                 **prev_fps,
                 **{d: per_day[d] for d in to_process},
             },
         },
+        rows_metric="rollup_rows_by_day",
     )
     return {
         "planned": planned,

@@ -10,6 +10,8 @@ Centralizes the configuration the engine depends on:
 * Arrow enabled for every pandas UDF / createDataFrame path.
 * Session timezone pinned UTC so timestamps compare bit-identically with
   the DuckDB oracle (DuckDB timestamps are UTC-naive).
+* Driver heap sized from the host's physical memory
+  (:func:`default_driver_memory`) unless ``SPARK_GRAFT_DRIVER_MEM`` sets it.
 """
 
 from __future__ import annotations
@@ -21,6 +23,19 @@ from pyspark.sql import SparkSession
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half the
+    host's physical memory in whole GiB, at least 1g and at most 48g —
+    the other half stays for the Python workers, the page cache and the
+    JVM's off-heap memory. Where physical memory cannot be read, Spark's
+    own default of 1g."""
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError, OSError):
+        return "1g"
+    return f"{min(max(phys // 2 // 2**30, 1), 48)}g"
 
 
 def get_spark(
@@ -52,7 +67,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -5,16 +5,30 @@ per-partition lineage manifests, and resume. This sandbox bundles no
 Iceberg runtime jar (SURVEY.md §7.0 check: 0 of 287 jars) and has no
 network to fetch one, so TableIO implements the same *semantics* over
 parquet + JSON manifests, behind an interface an Iceberg-backed
-implementation can satisfy drop-in (`try_iceberg()` probes for the
-runtime and would return an Iceberg-backed TableIO when present):
+implementation can satisfy drop-in:
 
   table root/
     snap-000001/              one directory per snapshot (immutable)
-      part-<partition>.parquet
+      <partition_col>=<pk>/part-*.parquet
     _manifests/
-      snap-000001.json        {snapshot_id, parent, created_by_job,
-                               partitions: {pk: {rows, files, metrics}}}
+      snap-000001.json        {snapshot_id, parent, job, partition_col,
+                               schema,
+                               partitions: {pk: {path | paths, files,
+                                                 bytes, rows}},
+                               metrics}
     _current                  name of the live snapshot (atomic pointer)
+
+``rows`` is the partition's row count, summed from the parquet footers
+of the files the write staged (no Spark job); a merged partition's
+``rows`` is the sum over its ``paths``. ``schema`` is the Spark schema of
+the data files (every column but the partition column, all nullable, as
+Spark reads them back): ``read`` hands it to the parquet reader, which
+then runs no schema-inference job; the partition column's type is still
+inferred from the directory names, which reads no file. A manifest without
+``schema`` (committed before it was recorded, or with ``schema: null``
+after writes of differing schemas shared the table) is read with
+inference, and a partition without ``rows`` is one committed before row
+counts were recorded.
 
 Resume semantics: a writer lists the target snapshot's manifest, diffs
 the partition keys it plans to produce against those already recorded,
@@ -34,13 +48,18 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 
-def try_iceberg(spark: SparkSession) -> bool:
-    """Probe for an Iceberg runtime on the classpath."""
-    try:
-        spark._jvm.org.apache.iceberg.Snapshot  # noqa: B018
-        return True
-    except Exception:
-        return False
+def _nullable(t):
+    """A schema's ``jsonValue`` with every field, array element and map
+    value nullable — the form Spark reads a parquet file back in."""
+    if isinstance(t, list):
+        return [_nullable(v) for v in t]
+    if not isinstance(t, dict):
+        return t
+    out = {k: v if k == "metadata" else _nullable(v) for k, v in t.items()}
+    for k in ("nullable", "containsNull", "valueContainsNull"):
+        if k in out:
+            out[k] = True
+    return out
 
 
 class TableIO:
@@ -124,6 +143,35 @@ class TableIO:
         os.replace(tmp, os.path.join(self.root, "_current"))
 
     # -- write / commit -------------------------------------------------
+    def _stage(self, df: DataFrame, partition_col: str) -> dict:
+        """Write ``df`` partitioned by ``partition_col`` into a
+        writer-private staging dir and describe what landed there:
+        {dir, schema, partitions: {pk: {name, files, bytes, rows}}}.
+        Row counts come from the staged files' parquet footers and the
+        schema from ``df`` itself, so neither costs a Spark job."""
+        import pyarrow.parquet as pq
+
+        stage = os.path.join(self.root, f".stage-{uuid.uuid4().hex}")
+        df.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
+
+        staged: dict = {}
+        for name in os.listdir(stage):
+            if not name.startswith(f"{partition_col}="):
+                continue
+            pdir = os.path.join(stage, name)
+            files = [
+                os.path.join(pdir, f) for f in os.listdir(pdir) if f.endswith(".parquet")
+            ]
+            staged[name.split("=", 1)[1]] = {
+                "name": name,
+                "files": len(files),
+                "bytes": sum(os.path.getsize(f) for f in files),
+                "rows": sum(pq.read_metadata(f).num_rows for f in files),
+            }
+        schema = df.schema.jsonValue()
+        schema["fields"] = [f for f in schema["fields"] if f["name"] != partition_col]
+        return {"dir": stage, "schema": _nullable(schema), "partitions": staged}
+
     def write_snapshot(
         self,
         df: DataFrame,
@@ -134,6 +182,7 @@ class TableIO:
         merge_partitions: bool = False,
         precondition=None,
         metrics_fn=None,
+        rows_metric: str | None = None,
     ) -> str | None:
         """Write ``df`` partitioned by ``partition_col`` as a new snapshot.
 
@@ -160,27 +209,23 @@ class TableIO:
         merge into the same stale parent and the loser's contribution
         would vanish from the bookkeeping). Keys it returns override
         both the carried metrics and ``metrics``.
+
+        ``rows_metric`` names a metrics key that receives this write's
+        per-partition row counts ({pk: rows}, from the staged footers) —
+        for a caller that keeps them as its own bookkeeping, e.g.
+        ``refresh_tier``'s ``rollup_rows_by_day``, without counting the
+        rows in a Spark job of its own.
         """
         # data files are written to a writer-private staging dir OUTSIDE
         # the commit lock (the long part — minutes at scale); the
         # snapshot id is allocated only once the lock is held, so it
         # reflects the table state at commit time, not write-start time
-        stage = os.path.join(self.root, f".stage-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
-
-        staged: dict = {}
-        for name in os.listdir(stage):
-            if not name.startswith(f"{partition_col}="):
-                continue
-            pk = name.split("=", 1)[1]
-            pdir = os.path.join(stage, name)
-            files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
-            staged[pk] = {
-                "name": name,
-                "files": len(files),
-                "bytes": sum(
-                    os.path.getsize(os.path.join(pdir, f)) for f in files
-                ),
+        staged = self._stage(df, partition_col)
+        stage = staged["dir"]
+        if rows_metric:
+            metrics = {
+                **(metrics or {}),
+                rows_metric: {pk: meta["rows"] for pk, meta in staged["partitions"].items()},
             }
 
         with self._commit_lock():
@@ -188,9 +233,8 @@ class TableIO:
             # a concurrent writer that committed while our data was
             # being written becomes our parent (rebase), never a victim
             parent = self.current_snapshot()
-            if precondition is not None and not precondition(
-                self.manifest(parent) or {}
-            ):
+            parent_manifest = (self.manifest(parent) if parent else None) or {}
+            if precondition is not None and not precondition(parent_manifest):
                 import shutil
 
                 shutil.rmtree(stage, ignore_errors=True)
@@ -203,14 +247,17 @@ class TableIO:
                     "path": os.path.join(snap, meta["name"]),
                     "files": meta["files"],
                     "bytes": meta["bytes"],
+                    "rows": meta["rows"],
                 }
-                for pk, meta in staged.items()
+                for pk, meta in staged["partitions"].items()
             }
-            if carry_forward and parent:
-                parent_manifest = self.manifest(parent) or {"partitions": {}}
+            schema = staged["schema"]
+            if carry_forward and parent_manifest:
+                kept_parent = False
                 for pk, meta in parent_manifest["partitions"].items():
                     if pk not in parts:
                         parts[pk] = meta
+                        kept_parent = True
                     elif merge_partitions:
                         old_paths = meta.get("paths") or [meta["path"]]
                         new = parts[pk]
@@ -219,6 +266,15 @@ class TableIO:
                             "files": meta["files"] + new["files"],
                             "bytes": meta["bytes"] + new["bytes"],
                         }
+                        if "rows" in meta:
+                            parts[pk]["rows"] = meta["rows"] + new["rows"]
+                        kept_parent = True
+                # files of two schemas under one manifest: leave the read
+                # to inference, which widens across snapshot dirs. A
+                # manifest that predates recorded schemas is taken to
+                # hold files of the schema its writers write today
+                if kept_parent and parent_manifest.get("schema", schema) != schema:
+                    schema = None
 
             # metrics CARRY FORWARD across commits, like partitions:
             # several writers share one table (batch refresh, streaming
@@ -226,14 +282,13 @@ class TableIO:
             # bookkeeping (input_fp_by_day, stream_batch_id,
             # fp_by_bucket, …) must survive the others' commits — a
             # writer overrides only the keys it owns
-            parent_metrics = {}
-            if parent:
-                parent_metrics = (self.manifest(parent) or {}).get("metrics", {})
+            parent_metrics = parent_manifest.get("metrics", {})
             self._commit_manifest({
                 "snapshot_id": snap,
                 "parent": parent,
                 "job": job,
                 "partition_col": partition_col,
+                "schema": schema,
                 "partitions": parts,
                 "metrics": {
                     **parent_metrics,
@@ -253,15 +308,23 @@ class TableIO:
         # partition values are recovered) and union
         from functools import reduce
 
+        from pyspark.sql.types import StructType
+
         by_snap: dict[str, list[str]] = {}
         for p in m["partitions"].values():
             for path in p.get("paths") or [p["path"]]:
                 snap_dir = path.split("/", 1)[0]
                 by_snap.setdefault(snap_dir, []).append(os.path.join(self.root, path))
-        dfs = [
-            spark.read.option("basePath", os.path.join(self.root, s)).parquet(*ps)
-            for s, ps in sorted(by_snap.items())
-        ]
+        # the recorded file schema spares one inference job per snapshot
+        # dir; the partition column is left out of it, so its type is
+        # inferred from the directory names exactly as without a schema
+        schema = StructType.fromJson(m["schema"]) if m.get("schema") else None
+        dfs = []
+        for s, ps in sorted(by_snap.items()):
+            reader = spark.read.option("basePath", os.path.join(self.root, s))
+            if schema is not None:
+                reader = reader.schema(schema)
+            dfs.append(reader.parquet(*ps))
         return reduce(lambda a, b: a.unionByName(b), dfs)
 
     def done_partitions(self, snapshot: str | None = None) -> set[str]:
@@ -310,6 +373,8 @@ class TableIO:
                 "parent": parent,
                 "job": job,
                 "partition_col": m.get("partition_col"),
+                # the files left are the parent's: so is their schema
+                **({"schema": m["schema"]} if "schema" in m else {}),
                 "partitions": {
                     pk: meta for pk, meta in m["partitions"].items() if pk not in drop
                 },
@@ -351,6 +416,7 @@ class TableIO:
                 "parent": parent,
                 "job": job,
                 "partition_col": m.get("partition_col"),
+                **({"schema": m["schema"]} if "schema" in m else {}),
                 "partitions": m["partitions"],
                 "metrics": {
                     **cur,

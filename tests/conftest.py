@@ -28,3 +28,27 @@ def documents(spark):
 @pytest.fixture(scope="session")
 def embeddings(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` runs ``fn`` and returns (its result, the number
+    of Spark jobs it launched), counted from a job group of its own — a
+    counter that host load cannot move."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"counted-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted")
+        try:
+            out = fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        # the status store is fed by the listener bus: drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

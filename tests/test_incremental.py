@@ -354,3 +354,36 @@ def test_vanished_bucket_bookkeeping_not_resurrected_by_same_refresh(
     assert gone not in m["metrics"]["fp_by_bucket"]
     assert gone not in m["metrics"]["encode_by_bucket"]
     tier.unpersist(); shrunk.unpersist()
+
+
+def test_read_launches_no_spark_job(spark, events, tmp_path, spark_jobs):
+    """With the file schema recorded in the manifest, reading a table —
+    here spread over two snapshot dirs — runs no schema-inference job."""
+    from sfa_spark.tableio import TableIO
+
+    root = str(tmp_path / "tier_1h")
+    days = sorted(
+        str(r["dt"]) for r in events.select(F.to_date("ts").alias("dt")).distinct().collect()
+    )
+    refresh_tier(spark, events.filter(F.to_date("ts").isin(days[:2])), root, KEY, "ts", "value")
+    refresh_tier(spark, events, root, KEY, "ts", "value")
+    tio = TableIO(root)
+    dirs = {p["path"].split("/", 1)[0] for p in tio.manifest()["partitions"].values()}
+    assert len(dirs) == 2
+    for read in (lambda: read_tier(spark, root), lambda: tio.read(spark)):
+        df, jobs = spark_jobs(read)
+        assert jobs == 0
+    assert df.count() == sum(p["rows"] for p in tio.manifest()["partitions"].values())
+
+
+def test_cold_refresh_job_count(spark, events, tmp_path, spark_jobs):
+    """A cold ``refresh_tier`` commit runs 4 Spark jobs: the day
+    fingerprints and the snapshot write, each a shuffle-map job plus a
+    result job under AQE. Rows per day come from the written files'
+    footers, so the rollup is not run a second time to count them (that
+    count took 3 more jobs)."""
+    r, jobs = spark_jobs(
+        lambda: refresh_tier(spark, events, str(tmp_path / "t"), KEY, "ts", "value")
+    )
+    assert r["processed"] == r["planned"] and r["planned"]
+    assert jobs == 4

@@ -457,3 +457,212 @@ def test_retention_cutoff_cannot_regress_under_stale_writer(spark, events, tmp_p
     # and a wide-window expire through the public API is also a no-regress
     expire_tier(root, now, keep_seconds=30 * 86400)
     assert tio.manifest()["metrics"]["retention_cutoff_day"] == newest_cut
+
+
+def _inferred_read(spark, tio, snapshot=None):
+    """The read as it was before schemas were recorded: one parquet read
+    with schema inference per snapshot dir, unioned by name."""
+    import os
+    from functools import reduce
+
+    m = tio.manifest(snapshot)
+    by_snap: dict = {}
+    for p in m["partitions"].values():
+        for path in p.get("paths") or [p["path"]]:
+            by_snap.setdefault(path.split("/", 1)[0], []).append(os.path.join(tio.root, path))
+    dfs = [
+        spark.read.option("basePath", os.path.join(tio.root, s)).parquet(*ps)
+        for s, ps in sorted(by_snap.items())
+    ]
+    return reduce(lambda a, b: a.unionByName(b), dfs)
+
+
+def _snapshot_dirs(m):
+    return {
+        path.split("/", 1)[0]
+        for p in m["partitions"].values()
+        for path in p.get("paths") or [p["path"]]
+    }
+
+
+def _committed_counts(spark, tio, pk):
+    return {
+        str(r[pk]): r["count"] for r in tio.read(spark).groupBy(pk).count().collect()
+    }
+
+
+def _assert_rows_and_schema_exact(spark, tio, pk):
+    """Manifest ``rows`` equal a Spark count of the committed table, and
+    the read with the recorded schema has exactly the inferred schema
+    (names, types, nullability, order, partition column type)."""
+    m = tio.manifest()
+    assert m["schema"]
+    assert {k: p["rows"] for k, p in m["partitions"].items()} == _committed_counts(spark, tio, pk)
+    assert tio.read(spark).schema == _inferred_read(spark, tio).schema
+
+
+def test_schema_and_rows_survive_every_commit_path(spark, tio, events):
+    """Top-level ``schema`` and per-partition ``rows`` are carried by a
+    carry-forward write, ``drop_partitions`` and ``commit_metrics``; a
+    ``merge_partitions`` write sums ``rows`` over the merged paths."""
+    df = events.withColumn("dt", F.to_date("ts"))
+    days = sorted(str(r["dt"]) for r in df.select("dt").distinct().collect())
+    assert len(days) >= 4
+    want = {
+        str(r["dt"]): r["count"] for r in df.groupBy("dt").count().collect()
+    }
+
+    tio.write_snapshot(df.filter(F.col("dt").isin(days[:2])), "dt", job="a")
+    first = tio.manifest()
+    assert {k: p["rows"] for k, p in first["partitions"].items()} == {
+        d: want[d] for d in days[:2]
+    }
+    schema = first["schema"]
+    assert "dt" not in [f["name"] for f in schema["fields"]]
+
+    steps = [
+        lambda: tio.write_snapshot(df.filter(F.col("dt").isin(days[2:4])), "dt", job="carry"),
+        lambda: tio.drop_partitions([days[0]]),
+        lambda: tio.commit_metrics({"note": 1}),
+    ]
+    for step in steps:
+        step()
+        m = tio.manifest()
+        assert m["schema"] == schema, m["job"]
+        assert all(p["rows"] == want[k] for k, p in m["partitions"].items()), m["job"]
+        assert tio.read(spark).count() == sum(want[k] for k in m["partitions"])
+    assert set(tio.manifest()["partitions"]) == set(days[1:4])
+
+    # append the same days again: each merged partition counts both parts
+    tio.write_snapshot(
+        df.filter(F.col("dt").isin(days[1:3])), "dt", job="merge", merge_partitions=True
+    )
+    m = tio.manifest()
+    assert m["schema"] == schema
+    assert {k: p["rows"] for k, p in m["partitions"].items()} == {
+        days[1]: 2 * want[days[1]],
+        days[2]: 2 * want[days[2]],
+        days[3]: want[days[3]],
+    }
+    assert len(m["partitions"][days[1]]["paths"]) == 2
+    _assert_rows_and_schema_exact(spark, tio, "dt")
+
+
+def test_rows_and_schema_equal_spark_counts_and_inference(spark, events, tmp_path):
+    """The two manifest shortcuts give what the removed Spark work gave,
+    on a ``dt`` tier table, a ``kb`` encoded table and a ``prefix`` word
+    index, each spread over two snapshot dirs: ``rows`` and
+    ``rollup_rows_by_day`` equal ``groupBy(pk).count()`` of the committed
+    table, and the read schema equals the inferred one."""
+    import numpy as np
+
+    from sfa_spark.incremental import refresh_encoded_tier, refresh_tier
+    from sfa_spark.operators.word_index import append_word_index, build_word_index
+    from sfa_spark.rollup import rollup_tier
+    from sfa_spark.transform.sfa import fit_windowing
+
+    # dt: two refreshes of a 1h tier, the second adding the later days
+    root = str(tmp_path / "tier_1h")
+    days = sorted(
+        str(r["dt"]) for r in events.select(F.to_date("ts").alias("dt")).distinct().collect()
+    )
+    refresh_tier(spark, events.filter(F.to_date("ts").isin(days[:2])), root, ["user_id"], "ts", "value")
+    refresh_tier(spark, events, root, ["user_id"], "ts", "value")
+    tier = TableIO(root)
+    assert len(_snapshot_dirs(tier.manifest())) == 2
+    _assert_rows_and_schema_exact(spark, tier, "dt")
+    rows_by_day: dict = {}
+    for m in reversed(tier.lineage()):
+        rows_by_day.update(m["metrics"]["rollup_rows_by_day"])
+    assert rows_by_day == _committed_counts(spark, tier, "dt")
+
+    # kb: encoded table, then late data for one key re-encodes its bucket
+    root = str(tmp_path / "enc_1m")
+    t1m = rollup_tier(events, ["user_id"], "ts", "value", "1m").cache()
+    refresh_encoded_tier(spark, t1m, root, ["user_id"], tier="1m", n_buckets=8)
+    uid = int(t1m.select("user_id").first()["user_id"])
+    late = t1m.withColumn(
+        "last", F.when(F.col("user_id") == uid, F.col("last") + 1.0).otherwise(F.col("last"))
+    )
+    refresh_encoded_tier(spark, late, root, ["user_id"], tier="1m", n_buckets=8)
+    t1m.unpersist()
+    enc = TableIO(root)
+    assert len(_snapshot_dirs(enc.manifest())) == 2
+    _assert_rows_and_schema_exact(spark, enc, "kb")
+
+    # prefix: word index built, then appended to (merged partitions)
+    rng = np.random.default_rng(5)
+    series = [rng.standard_normal(120).cumsum() for _ in range(6)]
+
+    def frame(ids):
+        rows = [(i, t, float(v)) for i in ids for t, v in enumerate(series[i])]
+        return spark.createDataFrame(rows, "series_id long, t int, value double")
+
+    root = str(tmp_path / "widx")
+    build_word_index(frame(range(3)), fit_windowing(series, 16, 4, 4, norm_mean=True), root)
+    append_word_index(frame(range(3, 6)), root)
+    widx = TableIO(root)
+    assert len(_snapshot_dirs(widx.manifest())) == 2
+    assert any("paths" in p for p in widx.manifest()["partitions"].values())
+    _assert_rows_and_schema_exact(spark, widx, "prefix")
+
+
+def test_legacy_manifest_without_schema_reads_and_refreshes(spark, events, tmp_path):
+    """A table committed before ``schema`` and ``rows`` were recorded is
+    read with inference, and a refresh on top of it records both for
+    what it writes."""
+    import json
+    import os
+
+    from sfa_spark.incremental import read_tier, refresh_tier
+    from sfa_spark.rollup import rollup_tier
+
+    root = str(tmp_path / "legacy")
+    days = sorted(
+        str(r["dt"]) for r in events.select(F.to_date("ts").alias("dt")).distinct().collect()
+    )
+    refresh_tier(spark, events.filter(F.to_date("ts").isin(days[:2])), root, ["user_id"], "ts", "value")
+    tio = TableIO(root)
+    path = os.path.join(root, "_manifests", f"{tio.current_snapshot()}.json")
+    with open(path) as f:
+        legacy = json.load(f)
+    del legacy["schema"]
+    for p in legacy["partitions"].values():
+        del p["rows"]
+    with open(path, "w") as f:
+        json.dump(legacy, f)
+
+    assert tio.read(spark).schema == _inferred_read(spark, tio).schema
+    assert tio.read(spark).count() == _inferred_read(spark, tio).count()
+
+    r = refresh_tier(spark, events, root, ["user_id"], "ts", "value")
+    assert r["processed"] == days[2:]
+    m = tio.manifest()
+    assert m["schema"]
+    assert [k for k, p in sorted(m["partitions"].items()) if "rows" not in p] == days[:2]
+    assert tio.read(spark).schema == _inferred_read(spark, tio).schema
+    assert read_tier(spark, root).count() == rollup_tier(events, ["user_id"], "ts", "value", "1h").count()
+
+
+def test_differing_schemas_fall_back_to_inference(spark, tio, events):
+    """Writes of differing file schemas under one manifest record no
+    schema, so the read widens across snapshot dirs by inference."""
+    df = events.withColumn("dt", F.to_date("ts"))
+    days = sorted(str(r["dt"]) for r in df.select("dt").distinct().collect())
+    tio.write_snapshot(
+        df.filter(F.col("dt") == days[0]).withColumn("v", F.lit(1).cast("int")), "dt"
+    )
+    tio.write_snapshot(
+        df.filter(F.col("dt") == days[1]).withColumn("v", F.lit(2).cast("long")), "dt"
+    )
+    m = tio.manifest()
+    assert m["schema"] is None
+    back = tio.read(spark)
+    assert dict(back.dtypes)["v"] == "bigint"
+    assert sorted(r["v"] for r in back.select("v").distinct().collect()) == [1, 2]
+    # replacing every partition leaves one schema again
+    tio.write_snapshot(
+        df.filter(F.col("dt").isin(days[:2])).withColumn("v", F.lit(3).cast("long")), "dt"
+    )
+    assert tio.manifest()["schema"]
+    assert tio.read(spark).schema == _inferred_read(spark, tio).schema
