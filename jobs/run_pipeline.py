@@ -87,6 +87,9 @@ def main() -> None:
             "processed_days": len(r["processed"]),
             "skipped_days": len(r["skipped"]),
             "stale_days": len(r.get("stale", [])),
+            # days scanned for a content fingerprint: the rest were
+            # cleared from their unchanged input files
+            "fingerprinted_days": len(r["fingerprinted"]),
         }
         if args.keep_days is not None:
             # retention anchored to the DATA's newest committed day, not
@@ -128,6 +131,7 @@ def main() -> None:
         "processed_buckets": len(r["processed"]),
         "skipped_buckets": len(r["skipped"]),
         "vanished_buckets": len(r.get("vanished", [])),
+        "fingerprinted_buckets": len(r["fingerprinted"]),
         "gc_staging": enc_gc,
         "points": sum(v["points"] for v in enc.values()),
         "ratio": round(

@@ -46,24 +46,71 @@ same-key stage (tier cascade, LOCF window, bounds aggregate) reuses it
 
 from __future__ import annotations
 
+from urllib.parse import unquote, urlparse
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 
-#: logical-plan node names that make up a bare file-scan frame
-_SCAN_NODES = {"Relation", "Project", "Filter"}
+
+def _seq(s) -> list:
+    """A Scala ``Seq`` reached through py4j, as a Python list."""
+    it, out = s.iterator(), []
+    while it.hasNext():
+        out.append(it.next())
+    return out
 
 
-def _is_bare_scan(df: DataFrame) -> bool:
-    """True iff the optimized logical plan is project/filter over file
-    relations only — the one shape where ``df.rdd`` is guaranteed not to
+def bare_scan_blocker(df: DataFrame, exact: bool = False) -> str | None:
+    """``None`` when ``df``'s optimized logical plan is a bare scan of
+    file relations, else the node that breaks that shape. The plan is
+    walked node by node through py4j.
+
+    The default shape is the one the fixup needs: projections and
+    filters over one relation, where ``df.rdd`` is guaranteed not to
     trigger any AQE stage execution and a repartition cannot collide
-    with an operator's own exchange."""
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    nodes = set()
-    for ln in plan.splitlines():
-        ln = ln.strip().lstrip(":+- ")
-        if ln:
-            nodes.add(ln.split(" ", 1)[0].split("[", 1)[0])
-    return bool(nodes) and nodes <= _SCAN_NODES
+    with an operator's own exchange. ``exact=True`` asks for the shape
+    whose rows are exactly its files' rows: file relations under
+    attribute-only projections and unions, no filter."""
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if not node.subqueries().isEmpty():
+            return f"{name} with a subquery"
+        if name == "LogicalRelation":
+            rel = node.relation().getClass().getSimpleName()
+            if exact and rel != "HadoopFsRelation":
+                return f"LogicalRelation over {rel}"
+        elif name == "Project":
+            if exact and any(
+                e.getClass().getSimpleName() != "AttributeReference"
+                for e in _seq(node.projectList())
+            ):
+                return "Project computing a column"
+        elif name != ("Union" if exact else "Filter"):
+            return name
+        stack += _seq(node.children())
+    return None
+
+
+def local_path(uri: str) -> str | None:
+    """The local filesystem path of a scan's file URI, or ``None`` for a
+    remote filesystem (footer and stat calls are not free there)."""
+    u = urlparse(uri)
+    if u.scheme not in ("", "file"):
+        return None
+    return unquote(u.path) or uri
+
+
+def read_footer(path: str) -> pq.FileMetaData | None:
+    """The parquet footer of a local file, or ``None`` when the file is
+    not parquet or cannot be read."""
+    try:
+        return pq.read_metadata(path)
+    except (OSError, pa.ArrowInvalid):
+        return None
 
 
 def _row_group_units(df: DataFrame, p: int) -> int | None:
@@ -74,25 +121,19 @@ def _row_group_units(df: DataFrame, p: int) -> int | None:
     the caller then trusts the split count."""
     try:
         files = df.inputFiles()
-    except Exception:
+    except Py4JError:
         return None
     if not files or len(files) * 2 > p:
         # no listing, or enough real files to feed the cores regardless
         # of their internal layout — don't touch footers
         return None
-    from urllib.parse import unquote, urlparse
-
-    import pyarrow.parquet as pq
-
     total = 0
     for f in files:
-        u = urlparse(f)
-        if u.scheme not in ("", "file"):
-            return None  # remote FS: footer reads aren't free there
-        try:
-            total += pq.ParquetFile(unquote(u.path) or f).num_row_groups
-        except Exception:
-            return None  # non-parquet / unreadable: trust the splits
+        path = local_path(f)
+        footer = read_footer(path) if path is not None else None
+        if footer is None:
+            return None  # remote / non-parquet / unreadable: trust the splits
+        total += footer.num_row_groups
         if total * 2 > p:
             return total  # already enough units — stop reading footers
     return total
@@ -104,7 +145,7 @@ def pin_scan_parallelism(
     """Repartition a starved bare-scan frame by ``part_cols``; no-op for
     every other input (see module docstring)."""
     try:
-        if not _is_bare_scan(df):
+        if bare_scan_blocker(df) is not None:
             return df
         sc = df.sparkSession.sparkContext
         p = sc.defaultParallelism
@@ -114,6 +155,6 @@ def pin_scan_parallelism(
             units = min(units, rgs)
         if units * 2 > p:
             return df
-    except Exception:  # plan introspection is best-effort
+    except Py4JError:  # plan introspection is best-effort
         return df
     return df.repartition(p * 2, *part_cols)

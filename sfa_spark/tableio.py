@@ -18,9 +18,23 @@ implementation can satisfy drop-in:
                                metrics}
     _current                  name of the live snapshot (atomic pointer)
 
+``metrics`` carry forward across commits; each writer owns its keys.
+A tier table's refresh keeps, per day, ``input_fp_by_day`` (content
+fingerprint ``"rows:hashsum"`` of the consumed input),
+``input_files_by_day`` (identity digest of the input files that
+fingerprint was taken from) and ``rollup_rows_by_day``; the encoded
+table keeps per bucket ``fp_by_bucket`` and ``encode_by_bucket``
+({points, raw_bytes, enc_bytes}), plus ``input_files_digest`` of its
+whole input. ``drop_partitions`` prunes every per-partition dict.
+
 ``rows`` is the partition's row count, summed from the parquet footers
 of the files the write staged (no Spark job); a merged partition's
-``rows`` is the sum over its ``paths``. ``schema`` is the Spark schema of
+``rows`` is the sum over its ``paths``. A writer can ask for more
+per-partition totals of the staged files (``write_snapshot``'s
+``partition_sums``: row counts from the footers, column sums read with
+pyarrow) and keeps them in its own ``metrics`` keys — e.g.
+``rollup_rows_by_day`` of a tier table, ``encode_by_bucket`` of the
+encoded table. ``schema`` is the Spark schema of
 the data files (every column but the partition column, all nullable, as
 Spark reads them back): ``read`` hands it to the parquet reader, which
 then runs no schema-inference job; the partition column's type is still
@@ -143,12 +157,15 @@ class TableIO:
         os.replace(tmp, os.path.join(self.root, "_current"))
 
     # -- write / commit -------------------------------------------------
-    def _stage(self, df: DataFrame, partition_col: str) -> dict:
+    def _stage(self, df: DataFrame, partition_col: str, sum_cols=()) -> dict:
         """Write ``df`` partitioned by ``partition_col`` into a
         writer-private staging dir and describe what landed there:
-        {dir, schema, partitions: {pk: {name, files, bytes, rows}}}.
-        Row counts come from the staged files' parquet footers and the
-        schema from ``df`` itself, so neither costs a Spark job."""
+        {dir, schema, partitions: {pk: {name, files, bytes, rows, sums}}}.
+        Row counts come from the staged files' parquet footers, ``sums``
+        ({col: total} for each of ``sum_cols``) from reading those columns
+        of the staged files with pyarrow, and the schema from ``df``
+        itself, so none of them costs a Spark job."""
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         stage = os.path.join(self.root, f".stage-{uuid.uuid4().hex}")
@@ -162,11 +179,13 @@ class TableIO:
             files = [
                 os.path.join(pdir, f) for f in os.listdir(pdir) if f.endswith(".parquet")
             ]
+            tables = [pq.read_table(f, columns=list(sum_cols)) for f in files] if sum_cols else []
             staged[name.split("=", 1)[1]] = {
                 "name": name,
                 "files": len(files),
                 "bytes": sum(os.path.getsize(f) for f in files),
                 "rows": sum(pq.read_metadata(f).num_rows for f in files),
+                "sums": {c: sum(pc.sum(t[c]).as_py() or 0 for t in tables) for c in sum_cols},
             }
         schema = df.schema.jsonValue()
         schema["fields"] = [f for f in schema["fields"] if f["name"] != partition_col]
@@ -182,7 +201,7 @@ class TableIO:
         merge_partitions: bool = False,
         precondition=None,
         metrics_fn=None,
-        rows_metric: str | None = None,
+        partition_sums: dict | None = None,
     ) -> str | None:
         """Write ``df`` partitioned by ``partition_col`` as a new snapshot.
 
@@ -210,22 +229,43 @@ class TableIO:
         would vanish from the bookkeeping). Keys it returns override
         both the carried metrics and ``metrics``.
 
-        ``rows_metric`` names a metrics key that receives this write's
-        per-partition row counts ({pk: rows}, from the staged footers) —
-        for a caller that keeps them as its own bookkeeping, e.g.
-        ``refresh_tier``'s ``rollup_rows_by_day``, without counting the
-        rows in a Spark job of its own.
+        ``partition_sums`` ({metrics key: column, or {name: column}})
+        fills metrics keys with this write's per-partition totals of the
+        staged files — ``{pk: total}``, or ``{pk: {name: total}}`` — for a
+        caller that keeps them as its own bookkeeping without a Spark job
+        of its own. The column ``"*"`` counts rows, from the footers
+        alone; any other column is summed with pyarrow. A key that is also
+        in ``metrics`` keeps the partitions this write did not touch:
+        ``refresh_tier`` records ``rollup_rows_by_day`` as ``"*"``, and
+        ``refresh_encoded_tier`` merges each bucket's points and
+        raw/encoded bytes into ``encode_by_bucket``.
         """
         # data files are written to a writer-private staging dir OUTSIDE
         # the commit lock (the long part — minutes at scale); the
         # snapshot id is allocated only once the lock is held, so it
         # reflects the table state at commit time, not write-start time
-        staged = self._stage(df, partition_col)
+        specs = partition_sums or {}
+        sum_cols = {
+            c
+            for spec in specs.values()
+            for c in ([spec] if isinstance(spec, str) else spec.values())
+        } - {"*"}
+        staged = self._stage(df, partition_col, sorted(sum_cols))
         stage = staged["dir"]
-        if rows_metric:
-            metrics = {
-                **(metrics or {}),
-                rows_metric: {pk: meta["rows"] for pk, meta in staged["partitions"].items()},
+
+        def total(meta: dict, col: str) -> int:
+            return meta["rows"] if col == "*" else meta["sums"][col]
+
+        metrics = dict(metrics or {})
+        for key, spec in specs.items():
+            metrics[key] = {
+                **metrics.get(key, {}),
+                **{
+                    pk: total(meta, spec)
+                    if isinstance(spec, str)
+                    else {name: total(meta, c) for name, c in spec.items()}
+                    for pk, meta in staged["partitions"].items()
+                },
             }
 
         with self._commit_lock():
@@ -292,7 +332,7 @@ class TableIO:
                 "partitions": parts,
                 "metrics": {
                     **parent_metrics,
-                    **(metrics or {}),
+                    **metrics,
                     **((metrics_fn(parent_metrics) if metrics_fn else {})),
                 },
             })

@@ -50,4 +50,9 @@ def test_pipeline_job_builds_then_resumes_noop(tmp_path):
     assert r2["tiers"]["1h"]["processed_days"] == 0
     assert r2["tiers"]["1m"]["expired_days"] == 0
     assert r2["encode"]["processed_buckets"] == 0
+    # the 1m tier reads a computed frame and is fingerprinted by content;
+    # the 1h tier and the encoded table see the 1m files unchanged
+    assert r2["tiers"]["1m"]["fingerprinted_days"] == r1["tiers"]["1m"]["processed_days"]
+    assert r2["tiers"]["1h"]["fingerprinted_days"] == 0
+    assert r2["encode"]["fingerprinted_buckets"] == 0
     assert r2["encode"]["points"] == r1["encode"]["points"]
