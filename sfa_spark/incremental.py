@@ -351,7 +351,7 @@ def refresh_tier(
             },
             "input_files_by_day": new_ids,
         },
-        partition_sums={"rollup_rows_by_day": "*"},
+        partition_stats={"rollup_rows_by_day": "*"},
     )
     return {
         "planned": planned,
@@ -514,8 +514,8 @@ def refresh_encoded_tier(
             "encode_by_bucket": prev_enc,
             "input_files_digest": digest,
         },
-        partition_sums={
-            "encode_by_bucket": {"points": "n", "raw_bytes": "raw_bytes", "enc_bytes": "enc_bytes"}
+        partition_stats={
+            "encode_by_bucket": {"points": "sum(n)", "raw_bytes": "sum(raw_bytes)", "enc_bytes": "sum(enc_bytes)"}
         },
         # on a rebucket nothing from the old scheme may survive
         carry_forward=not rebucket,

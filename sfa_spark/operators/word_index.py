@@ -8,18 +8,27 @@ Layout (TableIO snapshot, SURVEY §2.6/J5: "parquet min-max stats + prefix
 partitioning as the MBR analogue"):
 
   index root/snap-*/prefix=<p>/...parquet     rows: (key, offset, word,
-                                              dft, window values)
-  manifest metrics: per-prefix Fourier MBR (min/max per coefficient)
-                    == the trie node bounding boxes, collected once at
-                    build time from a tiny per-prefix aggregate
+                                              c0..c{l-1}, window values)
+  manifest metrics: per-prefix Fourier MBR (count, min/max per coefficient)
+                    == the trie node bounding boxes, read from the
+                    row-group min/max statistics of the files the write
+                    staged (``TableIO.write_snapshot``'s
+                    ``partition_stats``), so building costs the write alone
 
-Query = the trie's best-first search flattened into two batched phases:
+An index committed with a ``dft`` array column in place of c0..c{l-1}
+is still searched and appended to: queries read only key, offset, word
+and the window, and an append merges its boxes into the manifest's.
+
+Query = the trie's best-first search flattened into two batched phases,
+one Spark job each:
   1. seed: read ONLY the prefixes nearest the query word (by MBR lower
      bound) until ≥k windows are seen; exact-ED them → bound b.
   2. prune: every prefix whose MBR lower bound ≥ b is skipped WITHOUT
      reading its files (partition pruning — the trie's subtree skip);
      survivors get the per-row SFA lower bound + exact ED verify,
      distributed via mapInPandas.
+Each task keeps one running top-k per query over its Arrow batches and
+emits it once; the driver merges those few rows.
 
 No false dismissals: both the MBR bound and the per-word bound
 lower-bound true ED (EDBT'12), so the result equals brute force exactly
@@ -29,6 +38,7 @@ the manifest MBRs (α^prefix_len entries) stay driver-sized.
 
 from __future__ import annotations
 
+import os
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +47,9 @@ from sfa_spark.operators.distances import sfa_lower_bound
 from sfa_spark.tableio import TableIO
 from sfa_spark.transform import mft as _mft
 from sfa_spark.transform.sfa import SFAModel, quantize
+
+#: the columns a query reads, in both file layouts
+_READ_SCHEMA = "key long, offset int, word array<smallint>, win array<double>"
 
 
 def _prefix_of(words: np.ndarray, alphabet_size: int, prefix_len: int) -> np.ndarray:
@@ -56,8 +69,9 @@ def _transform_rows(
     value_col: str,
 ) -> DataFrame:
     """Per-series sliding-window transform → (key, offset, prefix, word,
-    dft, win) rows (the shared build/append kernel)."""
+    c0..c{l-1}, win) rows (the shared build/append kernel)."""
     w = model_dict["window_size"]
+    coefs = [f"c{i}" for i in range(model_dict["word_length"])]
 
     def per_series(pdf: pd.DataFrame) -> pd.DataFrame:
         m = SFAModel.from_dict(model_dict)
@@ -70,7 +84,7 @@ def _transform_rows(
                     "offset": np.empty(0, dtype=np.int32),
                     "prefix": np.empty(0, dtype=np.int64),
                     "word": [],
-                    "dft": [],
+                    **{c: np.empty(0) for c in coefs},
                     "win": [],
                 }
             )
@@ -93,7 +107,7 @@ def _transform_rows(
                 "offset": np.arange(n, dtype=np.int32),
                 "prefix": prefix,
                 "word": list(words.astype(np.int16)),
-                "dft": list(approx),
+                **{c: approx[:, i] for i, c in enumerate(coefs)},
                 "win": list(wn),
             }
         )
@@ -101,52 +115,25 @@ def _transform_rows(
     return series_df.groupBy(key_col).applyInPandas(
         per_series,
         schema="key long, offset int, prefix long, word array<smallint>, "
-        "dft array<double>, win array<double>",
+        + "".join(f"{c} double, " for c in coefs)
+        + "win array<double>",
     )
 
 
-def _prefix_mbrs(rows: DataFrame, l: int) -> dict:
-    """Per-prefix Fourier MBR — one tiny aggregate (the trie node boxes)."""
-    from pyspark.sql import functions as F
-
-    mbr_rows = (
-        rows.select(
-            "prefix", *[F.col("dft")[i].alias(f"c{i}") for i in range(l)]
-        )
-        .groupBy("prefix")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            *[F.min(f"c{i}").alias(f"lo{i}") for i in range(l)],
-            *[F.max(f"c{i}").alias(f"hi{i}") for i in range(l)],
-        )
-        .collect()
-    )
+def _mbr_stats(l: int) -> dict:
+    """The trie node boxes as ``partition_stats``: per prefix, the window
+    count and each coefficient's min and max over the staged files."""
     return {
-        str(r["prefix"]): {
-            "n": r["n"],
-            "lo": [r[f"lo{i}"] for i in range(l)],
-            "hi": [r[f"hi{i}"] for i in range(l)],
+        "mbrs": {
+            "n": "*",
+            "lo": [f"min(c{i})" for i in range(l)],
+            "hi": [f"max(c{i})" for i in range(l)],
         }
-        for r in mbr_rows
     }
 
 
-def _merge_mbrs(old: dict, new: dict) -> dict:
-    """SFATrie.mergeTrees (SFATrie.java:366-380) on manifest MBRs: counts
-    add, boxes take elementwise min/max — both associative, so appends
-    compose in any order."""
-    out = dict(old)
-    for p, m in new.items():
-        if p not in out:
-            out[p] = m
-        else:
-            o = out[p]
-            out[p] = {
-                "n": o["n"] + m["n"],
-                "lo": [min(a, b) for a, b in zip(o["lo"], m["lo"])],
-                "hi": [max(a, b) for a, b in zip(o["hi"], m["hi"])],
-            }
-    return out
+def _windows(manifest: dict) -> int:
+    return int(sum(v["n"] for v in manifest["metrics"]["mbrs"].values()))
 
 
 def build_word_index(
@@ -164,18 +151,19 @@ def build_word_index(
     snapshot manifest. Returns {snapshot, prefixes, windows}."""
     model_dict = model.to_dict()
     rows = _transform_rows(series_df, model_dict, prefix_len, key_col, t_col, value_col)
-    mbrs = _prefix_mbrs(rows, model.word_length)
     tio = TableIO(root)
     snap = tio.write_snapshot(
         rows,
         "prefix",
         job=job,
-        metrics={"model": model_dict, "prefix_len": prefix_len, "mbrs": mbrs},
+        metrics={"model": model_dict, "prefix_len": prefix_len},
+        partition_stats=_mbr_stats(model.word_length),
     )
+    m = tio.manifest(snap)
     return {
         "snapshot": snap,
-        "prefixes": len(mbrs),
-        "windows": int(sum(m["n"] for m in mbrs.values())),
+        "prefixes": len(m["metrics"]["mbrs"]),
+        "windows": _windows(m),
     }
 
 
@@ -205,30 +193,24 @@ def append_word_index(
     model_dict = m["metrics"]["model"]
     prefix_len = m["metrics"]["prefix_len"]
     rows = _transform_rows(series_df, model_dict, prefix_len, key_col, t_col, value_col)
-    new_mbrs = _prefix_mbrs(rows, model_dict["word_length"])
-    # the MBR union is evaluated UNDER the commit lock against the
-    # then-current manifest (metrics_fn): merging into a manifest read
-    # before the data write would lose a concurrent append's boxes —
-    # shrunken MBRs mean FALSE DISMISSALS, not just bad bookkeeping
-    merged_cell: dict = {}
-
-    def merge_fn(cur: dict) -> dict:
-        merged = _merge_mbrs(cur.get("mbrs") or {}, new_mbrs)
-        merged_cell.update(merged)
-        return {"model": model_dict, "prefix_len": prefix_len, "mbrs": merged}
-
+    # the boxes merge UNDER the commit lock into the then-current
+    # manifest's (merge_partitions): merging into a manifest read before
+    # the data write would lose a concurrent append's boxes — shrunken
+    # MBRs mean FALSE DISMISSALS, not just bad bookkeeping
     snap = tio.write_snapshot(
         rows,
         "prefix",
         job=job,
-        metrics_fn=merge_fn,
+        metrics={"model": model_dict, "prefix_len": prefix_len},
+        partition_stats=_mbr_stats(model_dict["word_length"]),
         merge_partitions=True,
     )
+    new = tio.manifest(snap)
     return {
         "snapshot": snap,
-        "prefixes": len(merged_cell),
-        "windows": int(sum(v["n"] for v in merged_cell.values())),
-        "appended_windows": int(sum(v["n"] for v in new_mbrs.values())),
+        "prefixes": len(new["metrics"]["mbrs"]),
+        "windows": _windows(new),
+        "appended_windows": _windows(new) - _windows(tio.manifest(new["parent"])),
     }
 
 
@@ -251,35 +233,6 @@ def _mbr_lb(
     return float(d[0] * d[0] + 2.0 * (d[2:] * d[2:]).sum())
 
 
-def _verify_topk_scalar(
-    pdf: pd.DataFrame, lb: np.ndarray, qq: np.ndarray, k: int, bound: float
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Reference implementation of the exact-verify phase: candidates in
-    LB order, one ED at a time, list-sort top-k with early abandon
-    (SFATrie.searchNearestNeighbor's inner loop shape). Kept ONLY as the
-    test oracle for the batched kernel below."""
-    sel = np.flatnonzero(lb < bound)
-    lb_order = sel[np.argsort(lb[sel], kind="stable")]
-    best: list[tuple[float, int, int]] = []
-    worst = bound
-    for idx in lb_order:
-        if len(best) >= k and lb[idx] >= worst:
-            break
-        s = np.asarray(pdf["win"].iloc[idx], dtype=np.float64)
-        d = float(((s - qq) ** 2).sum())
-        if len(best) < k or d < worst:
-            best.append((d, int(pdf["key"].iloc[idx]), int(pdf["offset"].iloc[idx])))
-            best.sort()
-            best = best[:k]
-            if len(best) >= k:
-                worst = best[-1][0]
-    return (
-        np.asarray([b[0] for b in best], dtype=np.float64),
-        np.asarray([b[1] for b in best], dtype=np.int64),
-        np.asarray([b[2] for b in best], dtype=np.int64),
-    )
-
-
 def _verify_topk_batched(
     pdf: pd.DataFrame,
     lb: np.ndarray,
@@ -297,7 +250,7 @@ def _verify_topk_batched(
     later chunks candidates are re-filtered against the tightened bound.
 
     Result: the k smallest (dist, key, offset) tuples among scored
-    candidates — identical to the scalar oracle except when two
+    candidates — identical to the scalar oracle in the tests except when two
     candidates tie EXACTLY on distance at the k-th boundary (the scalar's
     arrival-order strictness vs full tuple order; distances are always
     identical, which is what the no-false-dismissals contract promises)."""
@@ -350,13 +303,11 @@ def knn_query_index_batch(
     query_ids: list[int] | None = None,
 ) -> tuple[pd.DataFrame, dict]:
     """Exact k-NN for a whole QUERY SET in one seed pass + one verify
-    pass — 2 Spark jobs total, constant in the number of queries (the
-    single-query path costs 2 jobs PER query; the reference sweeps many
-    queries per run, SFATrieTest.java:57-91, query_lightcurves.txt).
-
-    Identical results to looping :func:`knn_query_index` per query
-    (tested): both phases are strictly MORE informed than the
-    single-query equivalents —
+    pass — one Spark job each, constant in the number of queries (the
+    reference sweeps many queries per run, SFATrieTest.java:57-91,
+    query_lightcurves.txt). Both phases are strictly MORE informed than
+    one query's alone, so each query's result is what a query set of
+    one returns (tested):
 
     * seed: the union of every query's nearest prefixes is read once;
       each query seeds its bound from ALL rows read (extra prefixes can
@@ -364,18 +315,17 @@ def knn_query_index_batch(
     * verify: survivors = prefixes some query still needs
       (mbr_lb < that query's bound), read once; inside the kernel each
       row's pruning bound per query is ``max(word_lb, prefix_mbr_lb)``
-      — the rows are read WITH their prefix column (basePath read), so
+      — a row's prefix is its word's first ``prefix_len`` symbols, so
       a prefix pruned for one query but read for another is skipped for
-      the first by its MBR bound, keeping per-query verify work the
-      same as the single-query path.
+      the first by its MBR bound.
+
+    Each task keeps a running top-k per query across its Arrow batches
+    — whose k-th distance also bounds the task's later batches — and
+    emits it once at its end; the driver merges at most
+    tasks × queries × k rows with a sort.
 
     Returns (pandas DF with columns query_id/key/offset/dist sorted by
-    (query_id, dist, key, offset), stats incl. jobs-shape evidence)."""
-    import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
+    (query_id, dist, key, offset), stats incl. the prefixes read)."""
     tio = TableIO(root)
     m = tio.manifest()
     model = SFAModel.from_dict(m["metrics"]["model"])
@@ -414,24 +364,19 @@ def knn_query_index_batch(
     }
 
     def read_prefixes(pfx: list[str]) -> DataFrame:
-        # basePath reads recover the hive `prefix` column for per-row
-        # MBR-bound pruning inside the kernel; append snapshots can span
-        # several snapshot roots → one read per root, unioned
-        from functools import reduce
-
-        by_root: dict[str, list[str]] = {}
-        for p in pfx:
-            for path in parts[p].get("paths") or [parts[p]["path"]]:
-                r = os.path.join(tio.root, path.split("/", 1)[0])
-                by_root.setdefault(r, []).append(os.path.join(tio.root, path))
-        dfs = [
-            spark.read.option("basePath", r).parquet(*ps)
-            for r, ps in sorted(by_root.items())
+        # one read over every file, so Spark packs them into few tasks
+        # (a read per snapshot root split each file on its own); the
+        # fixed read schema spares the inference job and holds for both
+        # file layouts (c0.. columns, or the older dft array)
+        paths = [
+            os.path.join(tio.root, path)
+            for p in pfx
+            for path in parts[p].get("paths") or [parts[p]["path"]]
         ]
-        return reduce(lambda a, b: a.unionByName(b), dfs)
+        return spark.read.schema(_READ_SCHEMA).parquet(*paths)
 
     # seed set: union over queries of their nearest prefixes until ≥k
-    # windows each (same rule as the single-query path)
+    # windows each
     seed: set[str] = set()
     for qi in range(qm.shape[0]):
         order_q = sorted(lbs, key=lambda p: (lbs[p][qi], p))
@@ -449,11 +394,14 @@ def knn_query_index_batch(
     ]
 
     def run_phase(df: DataFrame, bounds: dict[int, float]) -> pd.DataFrame:
-        prefix_lb = {p: v.tolist() for p, v in lbs.items()}
+        prefix_lb = {int(p): v.tolist() for p, v in lbs.items()}
+        prefix_len = m["metrics"]["prefix_len"]
 
-        def per_part(batches):
+        def per_task(batches):
             mm = SFAModel.from_dict(model_dict)
             nq = len(q_payload)
+            none = (np.empty(0), np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64))
+            best = [none] * nq
             for pdf in batches:
                 if pdf.empty:
                     continue
@@ -462,17 +410,23 @@ def knn_query_index_batch(
                 # fancy-index into a (distinct-prefixes × queries) matrix
                 # — a per-row python lambda per query would dominate the
                 # vectorized verify at large query sets (self-review r5)
-                codes, uniques = pd.factorize(pdf["prefix"].astype(str))
+                codes, uniques = pd.factorize(
+                    _prefix_of(words, mm.alphabet_size, prefix_len)
+                )
                 mbr_mat = np.asarray(
                     [prefix_lb.get(u, [0.0] * nq) for u in uniques],
                     dtype=np.float64,
                 )  # (u, nq)
-                outs = []
                 for qi, (qid, qv, dq, wq) in enumerate(q_payload):
+                    bd, bk, bo = best[qi]
                     bound = bounds.get(qid, np.inf)
+                    if bd.size >= k:
+                        # rows tying the running k-th distance stay
+                        # candidates: the final order breaks ties by key
+                        bound = min(bound, np.nextafter(bd[-1], np.inf))
                     mbr_row = mbr_mat[codes, qi]
                     if (mbr_row >= bound).all():
-                        continue  # whole partition pruned for this query
+                        continue  # whole batch pruned for this query
                     lb = sfa_lower_bound(
                         words,
                         np.asarray(wq, dtype=np.int64),
@@ -484,35 +438,33 @@ def knn_query_index_batch(
                     d, ks, os_ = _verify_topk_batched(
                         pdf, lb, np.asarray(qv), k, bound
                     )
-                    outs.append(
-                        pd.DataFrame(
-                            {"query_id": qid, "key": ks, "offset": os_, "dist": d}
-                        )
-                    )
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
+                    d, ks, os_ = (np.concatenate(v) for v in ((bd, d), (bk, ks), (bo, os_)))
+                    top = np.lexsort((os_, ks, d))[:k]
+                    best[qi] = (d[top], ks[top], os_[top])
+            out = [
+                pd.DataFrame({"query_id": qid, "key": bk, "offset": bo, "dist": bd})
+                for (qid, *_), (bd, bk, bo) in zip(q_payload, best)
+                if bd.size
+            ]
+            if out:
+                yield pd.concat(out, ignore_index=True)
 
-        out = df.mapInPandas(
-            per_part, schema="query_id long, key long, offset int, dist double"
-        )
-        w = W.partitionBy("query_id").orderBy(
-            F.asc("dist"), F.asc("key"), F.asc("offset")
-        )
+        return df.mapInPandas(
+            per_task, schema="query_id long, key long, offset int, dist double"
+        ).toPandas()
+
+    def top_k(res: pd.DataFrame) -> pd.DataFrame:
         return (
-            out.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-            .toPandas()
+            res.sort_values(["query_id", "dist", "key", "offset"])
+            .groupby("query_id", group_keys=False)
+            .head(k)
+            .reset_index(drop=True)
         )
 
-    seed_res = run_phase(read_prefixes(sorted(seed)), {})
+    merged = top_k(run_phase(read_prefixes(sorted(seed)), {}))
     bounds = {
-        int(qid): (
-            float(g["dist"].iloc[-1]) if len(g) >= k else np.inf
-        )
-        for qid, g in seed_res.sort_values(
-            ["query_id", "dist", "key", "offset"]
-        ).groupby("query_id")
+        int(qid): float(g["dist"].iloc[-1]) if len(g) >= k else np.inf
+        for qid, g in merged.groupby("query_id")
     }
     for qid in qids:
         bounds.setdefault(int(qid), np.inf)
@@ -528,20 +480,11 @@ def knn_query_index_batch(
         "prefixes_total": len(lbs),
         "prefixes_seed": len(seed),
         "prefixes_read": len(seed) + len(survivors),
-        # search phases executed (≤2 regardless of |queries|); actual
-        # Spark job counts are asserted via statusTracker in tests
         "phases": 1 if not survivors else 2,
     }
-    merged = seed_res
     if survivors:
         rest = run_phase(read_prefixes(survivors), bounds)
-        merged = pd.concat([seed_res, rest], ignore_index=True)
-    merged = (
-        merged.sort_values(["query_id", "dist", "key", "offset"])
-        .groupby("query_id", group_keys=False)
-        .head(k)
-        .reset_index(drop=True)
-    )
+        merged = top_k(pd.concat([merged, rest], ignore_index=True))
     return merged, stats
 
 
@@ -551,99 +494,11 @@ def knn_query_index(
     query: np.ndarray,
     k: int = 1,
 ) -> tuple[pd.DataFrame, dict]:
-    """Exact k-NN over the persisted index with prefix-partition pruning
-    — SINGLE-query form (2 Spark jobs per query). For query sets use
-    :func:`knn_query_index_batch` (one seed+verify pass for the whole
-    set); this form is kept as its parity oracle and for ad-hoc lookups.
+    """Exact k-NN of ONE query over the persisted index: a query set of
+    one through :func:`knn_query_index_batch`.
 
     Returns (result pandas DF with columns key/offset/dist, stats with
     prefixes_total / prefixes_seed / prefixes_read — the files-read
     evidence that pruning happened)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    tio = TableIO(root)
-    m = tio.manifest()
-    model = SFAModel.from_dict(m["metrics"]["model"])
-    mbrs = m["metrics"]["mbrs"]
-    parts = m["partitions"]
-
-    qv = _mft.znorm(np.asarray(query, dtype=np.float64), model.norm_mean)
-    dft_q = _mft.transform(
-        qv, model.window_size, model.word_length, model.norm_mean, model.lower_bounding
-    )
-    word_q = quantize(dft_q[None, :], model.bins)[0]
-
-    lbs = {
-        p: _mbr_lb(
-            dft_q, np.asarray(v["lo"]), np.asarray(v["hi"]), model.norm_mean
-        )
-        for p, v in mbrs.items()
-    }
-    order = sorted(lbs, key=lambda p: (lbs[p], p))
-
-    def read_prefixes(pfx: list[str]) -> DataFrame:
-        paths = [
-            os.path.join(tio.root, path)
-            for p in pfx
-            for path in (parts[p].get("paths") or [parts[p]["path"]])
-        ]
-        return spark.read.parquet(*paths)
-
-    # phase 1 — seed bound from the nearest prefixes (≥ k windows)
-    seed, seen = [], 0
-    for p in order:
-        seed.append(p)
-        seen += mbrs[p]["n"]
-        if seen >= k:
-            break
-
-    def exact_topk(df: DataFrame, bound: float | None) -> pd.DataFrame:
-        model_dict = model.to_dict()
-        q_list = qv.tolist()
-        dq_list = dft_q.tolist()
-        wq_list = word_q.tolist()
-
-        def per_part(batches):
-            mm = SFAModel.from_dict(model_dict)
-            qq = np.asarray(q_list)
-            dq = np.asarray(dq_list)
-            wq = np.asarray(wq_list, dtype=np.int64)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                words = np.stack(pdf["word"].to_numpy()).astype(np.int64)
-                lb = sfa_lower_bound(words, wq, dq, mm.bins, mm.norm_mean)
-                d, ks, os_ = _verify_topk_batched(
-                    pdf, lb, qq, k, bound if bound is not None else np.inf
-                )
-                yield pd.DataFrame({"key": ks, "offset": os_, "dist": d})
-
-        out = df.mapInPandas(per_part, schema="key long, offset int, dist double")
-        return (
-            out.orderBy(F.asc("dist"), F.asc("key"), F.asc("offset"))
-            .limit(k)
-            .toPandas()
-        )
-
-    seed_res = exact_topk(read_prefixes(seed), None)
-    bound = float(seed_res["dist"].iloc[-1]) if len(seed_res) >= k else np.inf
-
-    # phase 2 — prune whole prefixes by their MBR bound (files never read)
-    survivors = [p for p in order if p not in seed and lbs[p] < bound]
-    stats = {
-        "prefixes_total": len(order),
-        "prefixes_seed": len(seed),
-        "prefixes_read": len(seed) + len(survivors),
-    }
-    if not survivors:
-        return seed_res, stats
-    rest = exact_topk(read_prefixes(survivors), bound)
-    merged = (
-        pd.concat([seed_res, rest], ignore_index=True)
-        .sort_values(["dist", "key", "offset"])
-        .head(k)
-        .reset_index(drop=True)
-    )
-    return merged, stats
+    res, stats = knn_query_index_batch(spark, root, query, k)
+    return res.drop(columns="query_id"), stats

@@ -30,11 +30,12 @@ whole input. ``drop_partitions`` prunes every per-partition dict.
 ``rows`` is the partition's row count, summed from the parquet footers
 of the files the write staged (no Spark job); a merged partition's
 ``rows`` is the sum over its ``paths``. A writer can ask for more
-per-partition totals of the staged files (``write_snapshot``'s
-``partition_sums``: row counts from the footers, column sums read with
-pyarrow) and keeps them in its own ``metrics`` keys — e.g.
-``rollup_rows_by_day`` of a tier table, ``encode_by_bucket`` of the
-encoded table. ``schema`` is the Spark schema of
+per-partition statistics of the staged files (``write_snapshot``'s
+``partition_stats``: row counts and column min/max from the footers'
+row-group statistics, column sums read with pyarrow) and keeps them in
+its own ``metrics`` keys — e.g. ``rollup_rows_by_day`` of a tier table,
+``encode_by_bucket`` of the encoded table, the per-prefix boxes
+``mbrs`` of the word index. ``schema`` is the Spark schema of
 the data files (every column but the partition column, all nullable, as
 Spark reads them back): ``read`` hands it to the parquet reader, which
 then runs no schema-inference job; the partition column's type is still
@@ -54,7 +55,9 @@ from __future__ import annotations
 
 import contextlib
 import fcntl
+import functools
 import json
+import operator
 import os
 import tempfile
 import uuid
@@ -74,6 +77,74 @@ def _nullable(t):
         if k in out:
             out[k] = True
     return out
+
+
+#: how two values of one statistic combine: over files, row groups, and
+#: a merged partition's old and new files
+_COMBINE = {"count": operator.add, "sum": operator.add, "min": min, "max": max}
+
+
+def _parse_leaf(leaf: str) -> tuple[str, str]:
+    """``"*"`` → ("count", "*"); ``"min(c0)"`` → ("min", "c0")."""
+    if leaf == "*":
+        return "count", "*"
+    fn, col = leaf.rstrip(")").split("(", 1)
+    if fn not in _COMBINE:
+        raise ValueError(f"unknown partition statistic {leaf!r}")
+    return fn, col
+
+
+def _map_spec(spec, fn):
+    """Apply ``fn`` to every leaf of a statistics spec (a leaf string, or
+    a dict or list of specs), keeping the spec's shape."""
+    if isinstance(spec, dict):
+        return {k: _map_spec(v, fn) for k, v in spec.items()}
+    if isinstance(spec, list):
+        return [_map_spec(v, fn) for v in spec]
+    return fn(spec)
+
+
+def _merge_spec(spec, a, b):
+    """Combine two values of ``spec``, leaf by leaf."""
+    if isinstance(spec, dict):
+        return {k: _merge_spec(v, a[k], b[k]) for k, v in spec.items()}
+    if isinstance(spec, list):
+        return [_merge_spec(v, x, y) for v, x, y in zip(spec, a, b)]
+    return _COMBINE[_parse_leaf(spec)[0]](a, b)
+
+
+def _leaf_value(files, leaf: str):
+    """One statistic over open parquet files. ``count`` and ``min``/``max``
+    come from the footers: the row counts and each row group's column
+    statistics. A row group without a usable min/max for the column (no
+    statistics, or a NaN bound) is read with pyarrow, that column only;
+    so is every row group of a ``sum``."""
+    import math
+
+    import pyarrow.compute as pc
+
+    fn, col = _parse_leaf(leaf)
+    if fn == "count":
+        return sum(f.metadata.num_rows for f in files)
+    vals = []
+    for f in files:
+        md = f.metadata
+        idx = [md.schema.column(j).path for j in range(md.num_columns)].index(col)
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if rg.num_rows == 0:
+                continue
+            st = rg.column(idx).statistics
+            if fn != "sum" and st is not None and st.has_min_max:
+                v = getattr(st, fn)
+                if not (isinstance(v, float) and math.isnan(v)):
+                    vals.append(v)
+                    continue
+            arr = f.read_row_group(g, columns=[col]).column(0)
+            v = pc.sum(arr) if fn == "sum" else pc.min_max(arr)[fn]
+            if v.as_py() is not None:
+                vals.append(v.as_py())
+    return functools.reduce(_COMBINE[fn], vals) if vals else (0 if fn == "sum" else None)
 
 
 class TableIO:
@@ -157,15 +228,15 @@ class TableIO:
         os.replace(tmp, os.path.join(self.root, "_current"))
 
     # -- write / commit -------------------------------------------------
-    def _stage(self, df: DataFrame, partition_col: str, sum_cols=()) -> dict:
+    def _stage(self, df: DataFrame, partition_col: str, leaves=()) -> dict:
         """Write ``df`` partitioned by ``partition_col`` into a
         writer-private staging dir and describe what landed there:
-        {dir, schema, partitions: {pk: {name, files, bytes, rows, sums}}}.
-        Row counts come from the staged files' parquet footers, ``sums``
-        ({col: total} for each of ``sum_cols``) from reading those columns
-        of the staged files with pyarrow, and the schema from ``df``
-        itself, so none of them costs a Spark job."""
-        import pyarrow.compute as pc
+        {dir, schema, partitions: {pk: {name, files, bytes, rows, stats}}}.
+        ``stats`` holds each of ``leaves`` (see ``_leaf_value``) over the
+        partition's staged files. Row counts and min/max come from the
+        parquet footers, sums from reading those columns with pyarrow,
+        and the schema from ``df`` itself, so none of them costs a Spark
+        job."""
         import pyarrow.parquet as pq
 
         stage = os.path.join(self.root, f".stage-{uuid.uuid4().hex}")
@@ -176,17 +247,16 @@ class TableIO:
             if not name.startswith(f"{partition_col}="):
                 continue
             pdir = os.path.join(stage, name)
-            files = [
-                os.path.join(pdir, f) for f in os.listdir(pdir) if f.endswith(".parquet")
-            ]
-            tables = [pq.read_table(f, columns=list(sum_cols)) for f in files] if sum_cols else []
-            staged[name.split("=", 1)[1]] = {
-                "name": name,
-                "files": len(files),
-                "bytes": sum(os.path.getsize(f) for f in files),
-                "rows": sum(pq.read_metadata(f).num_rows for f in files),
-                "sums": {c: sum(pc.sum(t[c]).as_py() or 0 for t in tables) for c in sum_cols},
-            }
+            paths = [os.path.join(pdir, f) for f in os.listdir(pdir) if f.endswith(".parquet")]
+            with contextlib.ExitStack() as opened:
+                files = [opened.enter_context(pq.ParquetFile(f)) for f in paths]
+                staged[name.split("=", 1)[1]] = {
+                    "name": name,
+                    "files": len(files),
+                    "bytes": sum(os.path.getsize(f) for f in paths),
+                    "rows": _leaf_value(files, "*"),
+                    "stats": {leaf: _leaf_value(files, leaf) for leaf in leaves},
+                }
         schema = df.schema.jsonValue()
         schema["fields"] = [f for f in schema["fields"] if f["name"] != partition_col]
         return {"dir": stage, "schema": _nullable(schema), "partitions": staged}
@@ -201,7 +271,7 @@ class TableIO:
         merge_partitions: bool = False,
         precondition=None,
         metrics_fn=None,
-        partition_sums: dict | None = None,
+        partition_stats: dict | None = None,
     ) -> str | None:
         """Write ``df`` partitioned by ``partition_col`` as a new snapshot.
 
@@ -223,50 +293,36 @@ class TableIO:
 
         ``metrics_fn`` (current-metrics -> dict) is likewise evaluated
         UNDER the lock, for metrics whose merge rule must see the
-        then-current value rather than a pre-read one (e.g. an append's
-        MBR/count union — two concurrent appends would otherwise both
-        merge into the same stale parent and the loser's contribution
-        would vanish from the bookkeeping). Keys it returns override
-        both the carried metrics and ``metrics``.
+        then-current value rather than a pre-read one. Keys it returns
+        override both the carried metrics and ``metrics``.
 
-        ``partition_sums`` ({metrics key: column, or {name: column}})
-        fills metrics keys with this write's per-partition totals of the
-        staged files — ``{pk: total}``, or ``{pk: {name: total}}`` — for a
+        ``partition_stats`` ({metrics key: spec}) fills metrics keys with
+        this write's per-partition statistics of the staged files, for a
         caller that keeps them as its own bookkeeping without a Spark job
-        of its own. The column ``"*"`` counts rows, from the footers
-        alone; any other column is summed with pyarrow. A key that is also
-        in ``metrics`` keeps the partitions this write did not touch:
-        ``refresh_tier`` records ``rollup_rows_by_day`` as ``"*"``, and
-        ``refresh_encoded_tier`` merges each bucket's points and
-        raw/encoded bytes into ``encode_by_bucket``.
+        of its own. A spec is a leaf — ``"*"`` (row count), ``"sum(c)"``,
+        ``"min(c)"`` or ``"max(c)"`` — or a dict or list of specs, and the
+        key gets ``{pk: value}`` in the spec's shape. Row counts and
+        min/max come from the footers; sums read the column with pyarrow.
+        A key that is also in ``metrics`` keeps the partitions this write
+        did not touch: ``refresh_tier`` records ``rollup_rows_by_day`` as
+        ``"*"``, ``refresh_encoded_tier`` merges each bucket's points and
+        raw/encoded bytes into ``encode_by_bucket``. With
+        ``merge_partitions`` the key starts from the then-current
+        manifest's value, under the lock, and a merged partition's
+        values combine with it (counts and sums add, min/max widen): the
+        word index's per-prefix boxes, which a concurrent append must not
+        shrink.
         """
         # data files are written to a writer-private staging dir OUTSIDE
         # the commit lock (the long part — minutes at scale); the
         # snapshot id is allocated only once the lock is held, so it
         # reflects the table state at commit time, not write-start time
-        specs = partition_sums or {}
-        sum_cols = {
-            c
-            for spec in specs.values()
-            for c in ([spec] if isinstance(spec, str) else spec.values())
-        } - {"*"}
-        staged = self._stage(df, partition_col, sorted(sum_cols))
+        specs = partition_stats or {}
+        leaves: set = set()
+        _map_spec(list(specs.values()), leaves.add)
+        staged = self._stage(df, partition_col, sorted(leaves))
         stage = staged["dir"]
-
-        def total(meta: dict, col: str) -> int:
-            return meta["rows"] if col == "*" else meta["sums"][col]
-
         metrics = dict(metrics or {})
-        for key, spec in specs.items():
-            metrics[key] = {
-                **metrics.get(key, {}),
-                **{
-                    pk: total(meta, spec)
-                    if isinstance(spec, str)
-                    else {name: total(meta, c) for name, c in spec.items()}
-                    for pk, meta in staged["partitions"].items()
-                },
-            }
 
         with self._commit_lock():
             # CAS section: re-read the current pointer under the lock —
@@ -323,6 +379,15 @@ class TableIO:
             # fp_by_bucket, …) must survive the others' commits — a
             # writer overrides only the keys it owns
             parent_metrics = parent_manifest.get("metrics", {})
+            for key, spec in specs.items():
+                base = metrics.get(key, parent_metrics.get(key, {}) if merge_partitions else {})
+                new = {
+                    pk: _map_spec(spec, meta["stats"].__getitem__)
+                    for pk, meta in staged["partitions"].items()
+                }
+                if merge_partitions:
+                    new = {pk: _merge_spec(spec, base[pk], v) if pk in base else v for pk, v in new.items()}
+                metrics[key] = {**base, **new}
             self._commit_manifest({
                 "snapshot_id": snap,
                 "parent": parent,
@@ -365,7 +430,8 @@ class TableIO:
             if schema is not None:
                 reader = reader.schema(schema)
             dfs.append(reader.parquet(*ps))
-        return reduce(lambda a, b: a.unionByName(b), dfs)
+        # a column some snapshot dirs lack reads as null there
+        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
 
     def done_partitions(self, snapshot: str | None = None) -> set[str]:
         m = self.manifest(snapshot)

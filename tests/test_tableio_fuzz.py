@@ -178,7 +178,14 @@ def test_tableio_multiwriter_fuzz(spark, events, tmp_path):
     for name in os.listdir(root):
         if name.startswith("snap-"):
             assert int(name.split("-")[1]) <= cur_n, f"orphan {name} survived"
-    # no stale staging left past GC age
+    # every writer's own staging was committed or discarded: only the
+    # planted stale dirs are left, one sweep reaps all of them and a
+    # second finds nothing
+    planted = {
+        os.path.join(root, n) for n in os.listdir(root) if n.startswith(".stage-")
+    }
+    assert all(os.path.basename(p).startswith(".stage-fuzz") for p in planted), planted
+    assert set(tio.gc_stale_staging(max_age_seconds=24 * 3600)) == planted
     assert tio.gc_stale_staging(max_age_seconds=24 * 3600) == []
 
     # the table still reads end-to-end
